@@ -765,7 +765,7 @@ object Curation {
     * join + aggregate — the driver sees ONLY the scalar changed-count
     * (and the per-round localCheckpoint truncates the growing lineage).
     * Rounds are bounded by component diameter — near-dup clusters are
-    * dense and shallow (2-4 rounds here). For adversarial long-chain
+    * dense and shallow (2-7 rounds here). For adversarial long-chain
     * components, [[connectedComponentsStar]] ships the large-star/
     * small-star rewrite (Kiveris et al., CC in MapReduce): same
     * join-aggregate primitive and output contract, provably
@@ -929,30 +929,37 @@ object Curation {
       .orderBy("cluster_root")
   }
 
+  // Round caps of the two convergence loops. Hash-min needs diameter
+  // + 1 rounds: its graded callers (q100, q105, q109, q178, q217,
+  // q312) took 2-3 rounds at sf0.001 and sf0.01 and 4-7 at sf0.1, and
+  // CurationSpec's 15-link chain takes 16 — a component deeper than
+  // the cap belongs on the star path. Star rounds grow with log n: q106
+  // took 2-3 rounds at sf0.001-0.1, and CurationSpec's 256-link chain
+  // takes 9.
+  private[ops] val HashMinCap = 32
+  private[ops] val StarCap = 32
+
   /** Hash-to-min connected components over an undirected edge list
     * (given as one direction; symmetrized here): returns `(node, root)`
     * with root = the component's minimum node id. Each round is a
     * distributed join + min-aggregate; only the scalar changed-count
     * reaches the driver, and the per-round localCheckpoint truncates
-    * the growing lineage. See [[q100DupClusters]] for the
+    * the growing lineage. A component needing more than [[HashMinCap]]
+    * rounds fails loudly; see [[q100DupClusters]] for the
     * adversarial-diameter scaling note. */
   private[ops] def connectedComponents(pairs: DataFrame): DataFrame = {
     val edges = pairs.select(col("a"), col("b"))
       .union(pairs.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint(true)
-    var labels = edges.select(col("a").as("node")).distinct()
+    val labels0 = edges.select(col("a").as("node")).distinct()
       .withColumn("root", col("node"))
       .localCheckpoint(true)
-    // per-round checkpoint width from the MEASURED node count (r18,
-    // [[AdaptiveWidth]]): the label frame is node-sized every round, so
-    // a small working set stops paying width-proportional per-round
-    // fixed costs (the session cap keeps 100 TB behavior unchanged).
-    // The count rides the SAME per-round aggregate that already counts
-    // changed roots — no extra job; round 1 runs at the planner's width
-    // (unknown node count) and every later round at the derived one.
-    var labelW = -1
-    var changed = 1L
-    while (changed > 0) {
+    // the label frame is node-sized every round; its row count rides the
+    // SAME per-round aggregate that counts changed roots (no extra job),
+    // so round 1 runs at the planner's width (unknown node count) and
+    // every later round at the width the previous count warrants
+    val ((labels, _), _) = Fixpoint.until("hash-min connected components",
+        HashMinCap)((labels0, Option.empty[Long])) { case (labels, nRows) =>
       val prop = edges.join(labels, edges("a") === labels("node"))
         .select(edges("b").as("node"), col("root"),
           // typed from the live schema: node/root are longs for doc-id
@@ -966,15 +973,13 @@ object Curation {
       val next0 = labels.select(col("node"), col("root"),
           col("root").as("old")).union(prop)
         .groupBy("node").agg(min("root").as("root"), max("old").as("old"))
-      val next = (if (labelW > 0) next0.coalesce(labelW) else next0)
-        .localCheckpoint(true)
+      val next = nRows.fold(Fixpoint.materialize(next0))(
+        Fixpoint.materialize(next0, _, rowBytes = 48L))
       val stats = next.agg(count(lit(1)).as("n"),
         sum(when(col("root") < col("old"), 1L).otherwise(0L)).as("chg"))
         .collect()(0)
-      changed = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-      labelW = AdaptiveWidth.forRows(pairs.sparkSession,
-        stats.getLong(0), rowBytes = 48L)
-      labels = next.select("node", "root")
+      ((next.select("node", "root"), Some(stats.getLong(0))),
+        stats.isNullAt(1) || stats.getLong(1) == 0L)
     }
     labels
   }
@@ -1008,19 +1013,16 @@ object Curation {
     // canonical working set: DIRECTED a > b, no self-loops, distinct —
     // the symmetrized view each round is then duplicate-free by
     // construction (no per-round distinct shuffle on 2|E| rows)
-    var edges = pairs
+    val edges0 = pairs
       .select(greatest(col("a"), col("b")).as("a"),
         least(col("a"), col("b")).as("b"))
       .filter(col("a") =!= col("b")).distinct()
       .localCheckpoint(true)
-    // per-round checkpoint width from the MEASURED initial edge count
-    // (×2: a large-star round's directed set is bounded by the
-    // symmetrized view) — the r18 [[AdaptiveWidth]] discipline; one
-    // edge-sized scan paid once
-    val edgeW = AdaptiveWidth.forRows(pairs.sparkSession, edges.count() * 2)
-    var rounds = 0
-    var converged = false
-    while (!converged) {
+    // a large-star round's directed set is bounded by the symmetrized
+    // view of the initial edges: one edge-sized scan paid once
+    val edgeRows = edges0.count() * 2
+    val (edges, rounds) = Fixpoint.until("star connected components",
+        StarCap)(edges0) { edges =>
       // large-star over the symmetrized view: m(u) = min(Γ(u) ∪ {u});
       // each undirected {u,v} (u<v) emits exactly one directed (v, m(u))
       val sym = edges
@@ -1035,22 +1037,18 @@ object Curation {
       // links its parents ∪ itself to their minimum
       val mSmall = ls.groupBy("a").agg(min("b").as("m"))
       val joined = ls.join(mSmall, "a")
-      val ss = joined
+      val ss = Fixpoint.materialize(joined
         .select(col("a"), col("m").as("b"))         // child → min parent
         .union(joined.select(col("b").as("a"), col("m").as("b"))) // co-parents → min
-        .filter(col("a") =!= col("b")).distinct()
-        .coalesce(edgeW)
-        .localCheckpoint(true)
+        .filter(col("a") =!= col("b")).distinct(), edgeRows, rowBytes = 32L)
       // fixpoint = edge set unchanged. Both sides are DISTINCT sets, so
       // the symmetric difference is exactly the union rows with
       // multiplicity 1 — one aggregate, ONE job per round (r5; the
       // count+exceptAll formulation it replaces ran 2-3 jobs per round,
       // which at log-rounds scale doubles driver round-trips)
-      converged = ss.union(edges)
+      (ss, ss.union(edges)
         .groupBy("a", "b").agg(count(lit(1)).as("c"))
-        .filter(col("c") === 1).isEmpty
-      edges = ss
-      rounds += 1
+        .filter(col("c") === 1).isEmpty)
     }
     // final star forest: children point at their component min; roots
     // (and any node isolated by self-loop removal) label themselves

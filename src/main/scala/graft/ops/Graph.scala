@@ -65,9 +65,8 @@ object Graph {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val nodes = edges.select(col("src").as("node")).distinct()
       .localCheckpoint(true)
-    // per-round checkpoint width from the MEASURED node count (the rank
-    // table is node-sized every round) — r18, [[AdaptiveWidth]]
-    val prW = AdaptiveWidth.forRows(s, nodes.count(), rowBytes = 24L)
+    // the rank table is node-sized every round
+    val nNodes = nodes.count()
     var pr = nodes.withColumn("pr", lit(PrScale))
     for (_ <- 1 to PrIters) {
       val contrib = edges
@@ -76,11 +75,10 @@ object Graph {
         .select(col("dst").as("node"),
           expr("(pr * 85) div (outdeg * 100)").as("ctr"))
         .groupBy("node").agg(sum("ctr").as("ctr"))
-      pr = nodes.join(contrib, Seq("node"), "left")
+      pr = Fixpoint.materialize(nodes.join(contrib, Seq("node"), "left")
         .select(col("node"),
-          (lit(PrBase) + coalesce(col("ctr"), lit(0L))).as("pr"))
-        .coalesce(prW)
-        .localCheckpoint(true) // plan must not grow with iterations
+          (lit(PrBase) + coalesce(col("ctr"), lit(0L))).as("pr")),
+        nNodes, rowBytes = 24L)
     }
     pr.select(col("node").as("node_id"),
         when(col("node") % 2 === 0, lit("s")).otherwise(lit("c"))
@@ -224,12 +222,12 @@ object Graph {
     var n = frontier.count() // per-level scalar — bounded by the cap
     while (n > 0 && depth < HierMaxDepth) {
       depth += 1
-      frontier = frontier.join(edges, col("node") === col("parent"))
-        .filter(!array_contains(col("path"), col("child")))
-        .select(col("root"), col("child").as("node"),
-          lit(depth).as("depth"),
-          concat(col("path"), array(col("child"))).as("path"))
-        .localCheckpoint(true) // plan must not grow with depth
+      frontier = Fixpoint.materialize(
+        frontier.join(edges, col("node") === col("parent"))
+          .filter(!array_contains(col("path"), col("child")))
+          .select(col("root"), col("child").as("node"),
+            lit(depth).as("depth"),
+            concat(col("path"), array(col("child"))).as("path")))
       n = frontier.count()
       if (n > 0) levels += frontier
     }
@@ -318,11 +316,9 @@ object Graph {
     * reuses one exchange; the distance table stays node-sized. */
   def q235ShortestPath(s: SparkSession, dir: String): DataFrame = {
     val edges = weightedCoEdges(s, dir).localCheckpoint(true)
-    // per-round checkpoint width from the measured edge-row count — an
-    // upper bound on the node-sized distance table whatever the round
-    // (r18, [[AdaptiveWidth]]; overestimating only widens, never
-    // bottlenecks, and the session cap binds at cluster scale)
-    val distW = AdaptiveWidth.forRows(s, edges.count(), rowBytes = 24L)
+    // the edge-row count bounds the node-sized distance table whatever
+    // the round
+    val nEdges = edges.count()
     var dist = edges.select(col("src").as("node")).distinct()
       .filter(col("node") % SpSeedMod === 0)
       .select(col("node"), lit(0L).as("dist"))
@@ -330,10 +326,8 @@ object Graph {
     for (_ <- 1 to SpIters) {
       val relax = dist.join(edges, col("node") === col("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relax)
-        .groupBy("node").agg(min("dist").as("dist"))
-        .coalesce(distW)
-        .localCheckpoint(true) // plan must not grow with rounds
+      dist = Fixpoint.materialize(dist.unionByName(relax)
+        .groupBy("node").agg(min("dist").as("dist")), nEdges, rowBytes = 24L)
     }
     dist.orderBy("node")
   }
@@ -379,9 +373,8 @@ object Graph {
     var lab = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lab"))
       .localCheckpoint(true)
-    // per-round checkpoint width from the MEASURED node count (the
-    // label table is node-sized every round) — r18, [[AdaptiveWidth]]
-    val labW = AdaptiveWidth.forRows(s, lab.count(), rowBytes = 24L)
+    // the label table is node-sized every round
+    val nNodes = lab.count()
     for (_ <- 1 to LpIters) {
       val votes = edges
         .join(lab.select(col("node").as("dst"), col("lab")), "dst")
@@ -396,10 +389,9 @@ object Graph {
       // OPERATOR contract for arbitrary edge inputs (the symmetric
       // co-purchase construction guarantees in-neighbors, so the
       // branch is a no-op on the graded universe)
-      lab = lab.join(votes, Seq("node"), "left")
-        .select(col("node"), coalesce(col("newlab"), col("lab")).as("lab"))
-        .coalesce(labW)
-        .localCheckpoint(true) // plan must not grow with rounds
+      lab = Fixpoint.materialize(lab.join(votes, Seq("node"), "left")
+        .select(col("node"), coalesce(col("newlab"), col("lab")).as("lab")),
+        nNodes, rowBytes = 24L)
     }
     val total = lab.agg(countDistinct("lab").as("n_communities"))
     lab.groupBy("lab").agg(count(lit(1)).as("n_members"))
@@ -454,7 +446,7 @@ object Graph {
         struct(col("p2").as("src"), col("p1").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint(true) // deg + every peel round read it
-    val deg = kcoreDegrees(s, edges, Int.MaxValue)
+    val deg = kcoreDegrees(edges, Int.MaxValue)
     // ⌈mean degree⌉ off the NODE-sized degree table (sum(c) over deg =
     // edge rows; count(*) = distinct src — identical to the former
     // corpus-aggregate derivation, one tiny scan instead)
@@ -473,11 +465,9 @@ object Graph {
     * edge rows = sum of degrees), so the former per-round
     * `distinct().count()` + `count()` corpus scans collapse into one
     * node-sized aggregate (r18, guide §2.4). */
-  private def kcoreDegrees(s: SparkSession, edges: DataFrame,
-                           maxNodes: Long): DataFrame =
-    edges.groupBy("src").agg(count(lit(1)).as("c"))
-      .coalesce(AdaptiveWidth.forRows(s, maxNodes, rowBytes = 24L))
-      .localCheckpoint(true)
+  private def kcoreDegrees(edges: DataFrame, maxNodes: Long): DataFrame =
+    Fixpoint.materialize(edges.groupBy("src").agg(count(lit(1)).as("c")),
+      maxNodes, rowBytes = 24L)
 
   /** The peeling loop under q256 on any SYMMETRIC (src, dst) edge
     * frame — split out so KCoreSpec can drive the cascade fixture (a
@@ -486,14 +476,14 @@ object Graph {
   private[graft] def kcoreTrace(s: SparkSession, edgesIn: DataFrame,
                                 k: Long, iters: Int): DataFrame = {
     val edges = edgesIn.localCheckpoint(true)
-    kcoreTraceFrom(s, edges, kcoreDegrees(s, edges, Int.MaxValue), k, iters)
+    kcoreTraceFrom(s, edges, kcoreDegrees(edges, Int.MaxValue), k, iters)
   }
 
   /** Peeling over a pre-checkpointed edge frame and its
     * [[kcoreDegrees]] table. Per round: ONE edge-sized job (the two
     * broadcast semi-probes + checkpoint, coalesced to the width the
     * previous round's measured edge count warrants —
-    * [[AdaptiveWidth]]), one node-sized degree job, one tiny trace
+    * [[Fixpoint.materialize]]), one node-sized degree job, one tiny trace
     * aggregate. The former shape ran four corpus-scanning jobs per
     * round (keep checkpoint, probe checkpoint, distinct-count, count)
     * at the session's full static width regardless of how far the
@@ -513,15 +503,13 @@ object Graph {
     trace += ((0, n, m))
     for (r <- 1 to iters) {
       val keep = deg.filter(col("c") >= k).select("src")
-      edges = edges
+      // the previous round's measured edge-row count (2m) bounds this
+      // round's — peeling is monotone
+      edges = Fixpoint.materialize(edges
         .join(keep, Seq("src"), "left_semi")
-        .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
-        // the previous round's measured edge-row count (2m) bounds this
-        // round's — peeling is monotone — so the checkpoint width is
-        // derived from data, not the session constant
-        .coalesce(AdaptiveWidth.forRows(s, 2 * m))
-        .localCheckpoint(true) // plan must not grow with rounds
-      deg = kcoreDegrees(s, edges, n)
+        .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi"),
+        2 * m, rowBytes = 32L)
+      deg = kcoreDegrees(edges, n)
       val t = traceOf(deg)
       n = t._1; m = t._2
       trace += ((r, n, m))

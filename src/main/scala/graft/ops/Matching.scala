@@ -113,14 +113,12 @@ object Matching {
       val bestS = bestC.groupBy("p")
         .agg(min(col("dist") * PackC + col("c")).as("ks"))
         .select(col("p"), (col("ks") % PackC).as("c"))
-      val won = bestC.join(bestS, Seq("c", "p"))
-        .select(col("c"), col("p"), col("dist"), lit(round).as("round"))
-        .localCheckpoint(true)
+      val won = Fixpoint.materialize(bestC.join(bestS, Seq("c", "p"))
+        .select(col("c"), col("p"), col("dist"), lit(round).as("round")))
       matched = if (matched == null) won else matched.unionByName(won)
-      pool = pool
+      pool = Fixpoint.materialize(pool
         .join(won.select("c"), Seq("c"), "left_anti")
-        .join(won.select("p"), Seq("p"), "left_anti")
-        .localCheckpoint(true) // plan must not grow with rounds
+        .join(won.select("p"), Seq("p"), "left_anti"))
     }
     matched.select(col("round"), col("c").as("c_custkey"),
         col("p").as("s_suppkey"), col("dist").as("dist_c2"))

@@ -1,9 +1,10 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -68,7 +69,8 @@ object Layout {
     val goodRows = obs.get("rows").asInstanceOf[Long]
     val cumulative = cumulativeBefore + goodRows
     if (singleFile)
-      renameSingle(goodDir, dataFileName(table, cumulative, fmt))
+      renameSingle(good.sparkSession, goodDir,
+        dataFileName(table, cumulative, fmt))
 
     // Err quirks: only materialize when non-empty (`:185,196,220`), and
     // drop the column names — integer headers like pandas (`:186,197`).
@@ -100,26 +102,32 @@ object Layout {
       case "json"    => writer.json(dir)
       case "parquet" => writer.parquet(dir)
     }
-    renameTo.foreach(renameSingle(dir, _))
+    renameTo.foreach(renameSingle(df.sparkSession, dir, _))
   }
 
-  private def renameSingle(dir: String, name: String): Unit = {
-    val d = Paths.get(dir)
-    def withListing[A](f: List[Path] => A): A = {
-      val s = Files.list(d)
-      try f(s.iterator().asScala.toList) finally s.close()
+  /** Renames the one `part-` file under `dir` to `name` and drops the
+    * `_SUCCESS` marker and checksum files, through Hadoop `FileSystem`
+    * so a `file:`, `s3a://` or `hdfs://` root lands the same listing as
+    * a plain local path. The raw file system under a checksummed one
+    * lists the `.crc` sidecars, so they are removed like any file. */
+  private def renameSingle(spark: SparkSession, dir: String,
+                           name: String): Unit = {
+    val d = new Path(dir)
+    val fs = d.getFileSystem(spark.sessionState.newHadoopConf()) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
     }
-    val part = withListing(
-      _.filter(_.getFileName.toString.startsWith("part-"))) match {
+    val part = fs.listStatus(d).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).toList match {
         case one :: Nil => one
         case other => sys.error(s"expected 1 part file in $dir, got $other")
       }
-    Files.move(part, d.resolve(name), StandardCopyOption.REPLACE_EXISTING)
+    val target = new Path(d, name)
+    require(fs.rename(part, target), s"could not rename $part to $target")
     // one object per page, like the reference's put_object (`:210-221`)
-    withListing(_.filter { p =>
-      val n = p.getFileName.toString
-      n == "_SUCCESS" || n.endsWith(".crc")
-    }).foreach(Files.deleteIfExists(_))
+    fs.listStatus(d).map(_.getPath).filter { p =>
+      p.getName == "_SUCCESS" || p.getName.endsWith(".crc")
+    }.foreach(fs.delete(_, false))
   }
 
   /** q06_sink_layout — driver-visible smoke for the sink contract (no SQL

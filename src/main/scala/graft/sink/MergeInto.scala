@@ -48,18 +48,6 @@ object MergeInto {
                                filesRewritten: Int, rowsUpdated: Long,
                                rowsInserted: Long, rowsDeleted: Long)
 
-  // dev profiling hook (r18): SPARK_GRAFT_MERGE_PROFILE=1 prints the
-  // per-phase wall time of each merge to stderr
-  private def prof[T](label: String)(f: => T): T =
-    if (!sys.env.contains("SPARK_GRAFT_MERGE_PROFILE")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[merge-profile] $label%-18s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   def merge(spark: SparkSession, path: String, keyCol: String,
             changes: DataFrame): MergeReport = {
     val conf = spark.sessionState.newHadoopConf()
@@ -78,7 +66,7 @@ object MergeInto {
       .newFixedThreadPool(math.max(1, math.min(8, files.length)))
     val footerEc =
       scala.concurrent.ExecutionContext.fromExecutor(rangePool)
-    val ranges = prof("footers") {
+    val ranges =
       try {
         val futs = files.toSeq.map(f =>
           scala.concurrent.Future(TargetedDelete.keyRange(conf, f, keyCol))(
@@ -86,7 +74,6 @@ object MergeInto {
         futs.map(f => scala.concurrent.Await.result(f,
           scala.concurrent.duration.Duration.Inf))
       } finally rangePool.shutdown()
-    }
     val ranged = files.zip(ranges).flatMap { case (f, range) =>
       range match {
         case Some((lo, hi)) => Some((f, lo, hi))
@@ -124,7 +111,7 @@ object MergeInto {
       // Action 1: per-(file, op) CHANGE counts, with the
       // compaction-contract check riding the same job as sentinel rows
       // (__fidx = -1 for any key carrying more than one op)
-      val routedCounts = prof("routed-counts") {
+      val routedCounts =
         routed.groupBy("__fidx", "op").count()
           .unionByName(routed.groupBy(col(keyCol)).count()
             .filter(col("count") > 1)
@@ -132,23 +119,17 @@ object MergeInto {
               col("count")))
           .collect()
           .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
-      }
       require(!routedCounts.keySet.exists(_._1 == -1),
         "merge: change batch has multiple ops for one key — " +
           "compact it first (q183's max_by shape)")
       val touched = routedCounts.keySet.map(_._1) // bounded by file count
       val touchedSorted = touched.toSeq.sorted
-      // per-(file, op) HIT counts — ONE join job over all touched files
-      // together: a table row's floor file IS the file it lives in
-      // (ranges are disjoint and los is sorted), so tagging table keys
-      // with the same routing expression and joining once reproduces
-      // exactly the former per-file join counts
       // Action 2: per-(file, op) HIT counts — ONE join job over all
       // touched files together: a table row's floor file IS the file it
       // lives in (ranges are disjoint and los is sorted), so tagging
       // table keys with the same routing expression and joining once
       // reproduces exactly the former per-file join counts
-      val hits: Map[(Int, String), Long] = prof("hit-counts") {
+      val hits: Map[(Int, String), Long] =
         if (touchedSorted.isEmpty) Map.empty
         else spark.read
           .parquet(touchedSorted.map(i => ranged(i)._1.toString): _*)
@@ -159,7 +140,6 @@ object MergeInto {
           .groupBy("__fidx", "op").count()
           .collect()
           .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
-      }
       val work = touchedSorted.flatMap { i =>
         val nUps = routedCounts.getOrElse((i, "U"), 0L)
         val upsHit = hits.getOrElse((i, "U"), 0L)
@@ -176,45 +156,43 @@ object MergeInto {
       // story is unchanged: each file's swap stays atomic, a partial
       // batch heals by replay convergence, and [[TargetedDelete.recover]]
       // reaps an orphaned staging root.
-      prof("rewrites") {
-        if (work.nonEmpty) {
-          val workSet = work.map(_._1).toSet
-          val stagedRoot = new Path(dir,
-            s".merge-staged-${java.util.UUID.randomUUID.toString.take(8)}")
-          val outCols = tableCols.map(col).toSeq :+ col("__fidx")
-          val survivors = spark.read
-            .parquet(work.map { case (i, _, _, _) =>
-              ranged(i)._1.toString }: _*)
-            .withColumn("__fidx", floorFidx(col(keyCol)))
-            // anti join against ALL routed keys ≡ the former per-file
-            // anti joins: key equality implies the same floor file
-            .join(routed.select(col(keyCol)), Seq(keyCol), "left_anti")
-          val newRows = routed.filter(col("op") === "U")
-            .filter(col("__fidx").isInCollection(workSet))
-          survivors.select(outCols: _*)
-            .unionByName(newRows.select(outCols: _*))
-            .repartition(work.size, col("__fidx"))
-            .sortWithinPartitions(col("__fidx"), col(keyCol))
-            .write.partitionBy("__fidx").parquet(stagedRoot.toString)
-          work.foreach { case (i, _, _, _) =>
-            val f = ranged(i)._1
-            val pdir = new Path(stagedRoot, s"__fidx=$i")
-            val part =
-              if (fs.exists(pdir)) fs.listStatus(pdir).map(_.getPath)
-                .find(_.getName.endsWith(".parquet"))
-              else None
-            part match {
-              case Some(p) => TargetedDelete.swapPart(fs, f, p)
-              case None =>
-                // every row deleted, nothing inserted: the dynamic
-                // partition writer emits no dir for an absent value —
-                // stage a schema-only empty replacement instead
-                TargetedDelete.swapStaged(fs, f,
-                  spark.read.parquet(f.toString).limit(0).coalesce(1))
-            }
+      if (work.nonEmpty) {
+        val workSet = work.map(_._1).toSet
+        val stagedRoot = new Path(dir,
+          s".merge-staged-${java.util.UUID.randomUUID.toString.take(8)}")
+        val outCols = tableCols.map(col).toSeq :+ col("__fidx")
+        val survivors = spark.read
+          .parquet(work.map { case (i, _, _, _) =>
+            ranged(i)._1.toString }: _*)
+          .withColumn("__fidx", floorFidx(col(keyCol)))
+          // anti join against ALL routed keys ≡ the former per-file
+          // anti joins: key equality implies the same floor file
+          .join(routed.select(col(keyCol)), Seq(keyCol), "left_anti")
+        val newRows = routed.filter(col("op") === "U")
+          .filter(col("__fidx").isInCollection(workSet))
+        survivors.select(outCols: _*)
+          .unionByName(newRows.select(outCols: _*))
+          .repartition(work.size, col("__fidx"))
+          .sortWithinPartitions(col("__fidx"), col(keyCol))
+          .write.partitionBy("__fidx").parquet(stagedRoot.toString)
+        work.foreach { case (i, _, _, _) =>
+          val f = ranged(i)._1
+          val pdir = new Path(stagedRoot, s"__fidx=$i")
+          val part =
+            if (fs.exists(pdir)) fs.listStatus(pdir).map(_.getPath)
+              .find(_.getName.endsWith(".parquet"))
+            else None
+          part match {
+            case Some(p) => TargetedDelete.swapPart(fs, f, p)
+            case None =>
+              // every row deleted, nothing inserted: the dynamic
+              // partition writer emits no dir for an absent value —
+              // stage a schema-only empty replacement instead
+              TargetedDelete.swapStaged(fs, f,
+                spark.read.parquet(f.toString).limit(0).coalesce(1))
           }
-          fs.delete(stagedRoot, true)
         }
+        fs.delete(stagedRoot, true)
       }
       MergeReport(files.length, touched.size, work.size,
         work.map(_._3).sum,

@@ -61,25 +61,7 @@ object StreamGraded {
   private def replay(s: SparkSession, schemaFrom: String, glob: String,
                      tag: String, maxFilesPerTrigger: Option[Int] = None)(
       monitor: org.apache.spark.sql.Dataset[SEvent] => DataFrame): DataFrame = {
-    // Scale-adaptive stream width (r17 optimization; guide §2): stateful
-    // micro-batches run with AQE DISABLED, so the session's static
-    // shuffle width applies verbatim to EVERY batch — at width 32 even a
-    // 4-row sentinel batch runs 32 tasks × (state-store load + delta
-    // commit + sink file) per stateful operator, and the profile hook
-    // measured those fixed per-partition costs at ~90% of replay wall
-    // time (q313: 3.4–6.3 s per 4-row batch). Since AQE cannot coalesce
-    // here, derive the width from source bytes instead: one shuffle
-    // partition per `spark.graft.stream.partitionBytes` of source
-    // (default 64 MB — guide §2.2's partition sizing), capped at the
-    // session's own configured width (the cluster ceiling: a deployment
-    // that sizes `spark.sql.shuffle.partitions` to its executor fleet
-    // keeps that as the maximum state fan-out), floor 1. The stream runs
-    // on a cloned session (same SparkContext, independent SQLConf) so
-    // batch queries on the caller's session are untouched. Partition
-    // count never changes WHAT a keyed stateful operator computes — only
-    // how many state stores hold the keys — and each replay starts a
-    // fresh checkpoint, so no restore ever sees a changed width.
-    val ss = StreamWidth.sizedSession(s, glob, tag)
+    val ss = StreamWidth.sizedSession(s, glob)
     import ss.implicits._
     val schema = ss.read.parquet(schemaFrom).schema
     val reader = ss.readStream.schema(schema)
@@ -99,24 +81,14 @@ object StreamGraded {
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     try {
       q.awaitTermination()
-      // measurement hook (guide §1): per-micro-batch duration breakdown
-      // on demand — where replay wall time goes (addBatch vs planning vs
-      // state commit), printed only when profiling is asked for
-      if (sys.env.contains("SPARK_GRAFT_STREAM_PROFILE"))
-        q.recentProgress.foreach { p =>
-          val d = p.durationMs
-          System.err.println(s"[replay-profile] $tag batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durations=$d " +
-            s"stateRows=${p.stateOperators.map(_.numRowsTotal).mkString(",")}")
-        }
       // state footprint of the replay just run (max across batches per
       // operator) — read by ScaleProbe's state table (r17, the r16
       // verdict's item 5: measure streaming state, not just time).
       // NOTE: recentProgress retains only the most recent ~100 progress
       // updates (spark.sql.streaming.numRecentProgressUpdates) — ample
       // for today's 1–4-batch replays; a future many-batch replay must
-      // switch this (and the profile hook above) to a
-      // StreamingQueryListener or the stats silently truncate.
+      // switch this to a StreamingQueryListener or the stats silently
+      // truncate.
       stateStats(tag) = q.recentProgress.toSeq
         .flatMap(_.stateOperators.toSeq
           .map(o => (o.operatorName, o.numRowsTotal, o.memoryUsedBytes)))

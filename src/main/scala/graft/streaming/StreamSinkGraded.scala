@@ -91,13 +91,10 @@ object StreamSinkGraded {
       (table, cdc)
     }
 
-  private def mergedTable(s: SparkSession, dir: String): String = {
+  /** Copies the pristine table into the empty dir `table` and drains
+    * the CDC backlog onto the copy through the real streaming path. */
+  private def mergeOnto(s: SparkSession, dir: String, table: String): Unit = {
       val (pristine, cdc) = pristineFixture(s, dir)
-      // the MERGE WORK runs on every call (r18; memoizing it made bench
-      // reps 2+ time a tiny aggregate — the r17 verdict's
-      // measurement-gaming finding): copy the pristine table and drain
-      // the CDC backlog onto the copy through the real streaming path
-      val table = ScratchExport.scratchDir("graft-q315-table-")
       val srcDir = new org.apache.hadoop.fs.Path(pristine)
       val dstDir = new org.apache.hadoop.fs.Path(table)
       val fs = srcDir.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -110,8 +107,7 @@ object StreamSinkGraded {
       // rule the monitor replays got in r17; every per-batch
       // compaction aggregate, routing count, and staged rewrite inside
       // foreachBatch inherits the stream session's width)
-      val ss = StreamWidth.sizedSession(s, s"$cdc/*.parquet",
-        "q315_merge_stream")
+      val ss = StreamWidth.sizedSession(s, s"$cdc/*.parquet")
       val schema = ss.read.parquet(s"$cdc/b0_updates.parquet").schema
       val changes = ss.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -119,7 +115,6 @@ object StreamSinkGraded {
       val q = MergeStream.run(changes, table, "o_orderkey",
         Trigger.AvailableNow())
       try q.awaitTermination() finally q.stop()
-      table
   }
 
   /** q315: [[MergeStream]] graded end-to-end — the q233 discipline
@@ -132,18 +127,31 @@ object StreamSinkGraded {
     * did and did not touch. MergeStreamSpec keeps pinning the
     * mechanics the aggregate cannot see (replay convergence,
     * intra-batch compaction unit contract). */
-  def q315MergeStream(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(mergedTable(s, dir))
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n_orders"),
-        sum(expr("cast(round(o_totalprice * 100) as bigint)"))
-          .as("sum_price_c2"),
-        min(col("o_orderkey")).as("min_key"),
-        max(col("o_orderkey")).as("max_key"))
+  def q315MergeStream(s: SparkSession, dir: String): DataFrame = {
+    // the MERGE WORK runs on every call, each onto its own table copy
+    // (memoizing it made bench reps 2+ time only a tiny aggregate). The
+    // aggregate (one row per order status, ≤ 3) is collected before
+    // the copy is deleted, so no call leaves a table behind.
+    val table = ScratchExport.scratchDir("graft-q315-table-")
+    val tablePath = new org.apache.hadoop.fs.Path(table)
+    val (schema, rows) = try {
+      mergeOnto(s, dir, table)
+      val agg = s.read.parquet(table)
+        .groupBy("o_orderstatus")
+        .agg(count(lit(1)).as("n_orders"),
+          sum(expr("cast(round(o_totalprice * 100) as bigint)"))
+            .as("sum_price_c2"),
+          min(col("o_orderkey")).as("min_key"),
+          max(col("o_orderkey")).as("max_key"))
+      (agg.schema, agg.collect())
+    } finally tablePath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .delete(tablePath, true)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
       .orderBy("o_orderstatus")
+  }
 
   /** Runs the q316 ingest replay — ON EVERY CALL (r18; see
-    * [[mergedTable]] — the once-per-JVM memoization made bench reps 2+
+    * [[q315MergeStream]] — the once-per-JVM memoization made bench reps 2+
     * time a 27-row local sort) — and returns the union of per-batch
     * screening reports. The documents table
     * streams through the real [[IngestDedup.start]] path in three
@@ -180,8 +188,7 @@ object StreamSinkGraded {
       // replay width from source bytes (r18, the [[StreamWidth]] rule):
       // the per-batch band screens, admissions, and index writes inside
       // foreachBatch inherit the stream session's width
-      val ss = StreamWidth.sizedSession(s, s"$src/*.parquet",
-        "q316_ingest_dedup")
+      val ss = StreamWidth.sizedSession(s, s"$src/*.parquet")
       val schema = ss.read.parquet(s"$src/b0.parquet").schema
       val stream = ss.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$src/*.parquet")

@@ -9,15 +9,15 @@ import org.apache.spark.sql.SparkSession
   * the stream session's static width too — so the session's
   * `spark.sql.shuffle.partitions` applies verbatim to EVERY batch. At
   * width 32 even a 4-row sentinel batch runs 32 tasks × (state-store
-  * load + delta commit + sink file) per stateful operator; the r17
-  * profile hook measured those fixed per-partition costs at ~90% of
-  * replay wall time. Since AQE cannot coalesce here, the width derives
-  * from source bytes instead: one shuffle partition per
-  * `spark.graft.stream.partitionBytes` of source (default 64 MB —
-  * guide §2.2's partition sizing), capped at the session's own
-  * configured width (the cluster ceiling: a deployment that sizes
-  * `spark.sql.shuffle.partitions` to its executor fleet keeps that as
-  * the maximum fan-out), floor 1. The stream runs on a cloned session
+  * load + delta commit + sink file) per stateful operator; r17's
+  * per-batch duration breakdown put those fixed per-partition costs at
+  * ~90% of replay wall time. Since AQE cannot coalesce here, the width
+  * derives from source bytes instead by the iterative loops' rule
+  * ([[graft.ops.Fixpoint.width]]): one shuffle partition per 64 MiB of
+  * source, capped at the session's own configured width (the cluster
+  * ceiling: a deployment that sizes `spark.sql.shuffle.partitions` to
+  * its executor fleet keeps that as the maximum fan-out), floor 1. The
+  * stream runs on a cloned session
   * (same SparkContext, independent SQLConf) so batch queries on the
   * caller's session are untouched. Partition count never changes WHAT
   * a keyed stateful operator or a per-batch merge computes — and each
@@ -27,7 +27,7 @@ private[streaming] object StreamWidth {
 
   /** A cloned session whose shuffle width is derived from the bytes
     * under `glob`. */
-  def sizedSession(s: SparkSession, glob: String, tag: String): SparkSession = {
+  def sizedSession(s: SparkSession, glob: String): SparkSession = {
     val ss = s.newSession()
     val srcPath = new org.apache.hadoop.fs.Path(glob)
     val fs = srcPath.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -39,21 +39,14 @@ private[streaming] object StreamWidth {
       .map(_.map(st =>
         if (st.isDirectory) fs.getContentSummary(st.getPath).getLength
         else st.getLen).sum).getOrElse(0L)
-    val targetBytes = ss.conf
-      .get("spark.graft.stream.partitionBytes", (64L << 20).toString).toLong
-    val sessionW = ss.conf.get("spark.sql.shuffle.partitions").toInt
-    val width = math.max(1L, math.min(sessionW.toLong,
-      (srcBytes + targetBytes - 1) / targetBytes)).toInt
-    ss.conf.set("spark.sql.shuffle.partitions", width.toString)
+    ss.conf.set("spark.sql.shuffle.partitions",
+      graft.ops.Fixpoint.width(ss, srcBytes).toString)
     // AQE off on the CLONE only (batch sessions keep it): stateful
     // replays run with AQE engine-disabled anyway, and for the
     // foreachBatch sinks' width-pinned tiny batch jobs AQE is pure
     // per-action planning overhead — A/B'd at sf0.1: 3.66 → 3.00 s per
     // q315 merge batch with identical plans (r18)
     ss.conf.set("spark.sql.adaptive.enabled", "false")
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROFILE"))
-      System.err.println(
-        s"[replay-profile] $tag srcBytes=$srcBytes width=$width")
     ss
   }
 }

@@ -88,6 +88,30 @@ class LayoutSpec extends AnyFunSuite {
       Seq((1L, "A"), (2L, "B"), (3L, "C")))
   }
 
+  test("a file: URI root lands the same one-object-per-page listing as a " +
+    "plain path: no _SUCCESS, no .crc") {
+    def listing(root: String): Seq[String] = {
+      val rootPath = Paths.get(root)
+      val walk = Files.walk(rootPath)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => rootPath.relativize(p).toString).toSeq.sorted
+      finally walk.close()
+    }
+    val want = Seq(
+      s"result-err/json/ztab/$ts/ztab-err.json",
+      s"result-err/parquet/ztab/$ts/ztab-err.parquet",
+      s"result/json/ztab/$ts/ztab3.json",
+      s"result/parquet/ztab/$ts/ztab3.parquet")
+    val (plain, uri) = (freshRoot(), freshRoot())
+    try {
+      for (root <- Seq(plain, s"file://$uri"); fmt <- Seq("json", "parquet"))
+        Layout.writeDual(good, err, root, fmt, "ztab", ts)
+      assert(listing(plain) == want)
+      assert(listing(uri) == want)
+    } finally Seq(plain, uri).foreach(r =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(r)))
+  }
+
   test("q06 driver entry lists the written files (smoke)") {
     val df = Layout.q06SinkLayout(spark, graft.SparkTestBase.Sf0001)
     val paths = df.as[String].collect().toSeq

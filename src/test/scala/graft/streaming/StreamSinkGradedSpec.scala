@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -56,6 +58,21 @@ class StreamSinkGradedSpec extends AnyFunSuite {
     assert(n(k % 11 === 0) > 0, "out-of-range insert")
     assert(n(k % 15 === 0 && k % 7 =!= 0) > 0,
       "cross-batch overwrite (+10 then +7) — batch ORDER is graded")
+  }
+
+  test("q315 leaves no per-call table copy behind") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def tableDirs(): Set[String] = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft-q315-table-")).toSet
+      finally ls.close()
+    }
+    val before = tableDirs()
+    val rows = graft.SparkEntry.queries("q315_merge_stream")(spark, dir)
+      .collect()
+    assert(rows.length == 3)
+    assert(tableDirs() == before, "a graft-q315-table-* dir survived the call")
   }
 
   test("q316 equals a plain-Scala simulation of the three-batch admission " +
